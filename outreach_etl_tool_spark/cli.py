@@ -12,8 +12,10 @@ Usage::
 
     python -m outreach_etl_tool_spark --config creds.json --output /data
 
-The HTTP fetcher is injected; the default OAuth+requests implementation
-is constructed lazily so offline/test runs can pass any callable.
+Paging, retries and the HTTP transport belong to ``ingest/rest.py``;
+this module only supplies the OAuth token refresh
+(:func:`make_http_fetcher`). The fetcher is injected, so offline/test
+runs can pass any callable.
 """
 
 from __future__ import annotations
@@ -23,12 +25,21 @@ import datetime as dt
 import json
 import logging
 import sys
+import time
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .ingest import load_ref_schema
-from .ingest.rest import Fetcher, replication_window, strip_prefix, sync_endpoint
+from .ingest.rest import (
+    Fetcher,
+    http_fetcher,
+    post_form,
+    replication_window,
+    strip_prefix,
+    sync_endpoint,
+)
 from .sinks import LogNotifier, Notifier, write_partitioned
 
 logger = logging.getLogger("outreach_etl_tool_spark")
@@ -48,51 +59,19 @@ TOKEN_URL = "https://api.outreach.io/oauth/token"
 def make_http_fetcher(config: dict) -> Fetcher:
     """OAuth-refreshing JSON-API fetcher (outreach_etl.py:54-109 parity,
     without the stale-global token bug — expiry lives in the closure)."""
-    import time as _time
-
-    import requests  # deferred: offline runs never import it
-
     state = {"token": None, "expires_at": 0.0}
+    form = {k: config[k] for k in ("client_id", "client_secret", "refresh_token",
+                                   "redirect_uri")}
 
     def token() -> str:
-        if state["token"] is None or _time.time() >= state["expires_at"]:
-            resp = requests.post(
-                TOKEN_URL,
-                data={
-                    "client_id": config["client_id"],
-                    "client_secret": config["client_secret"],
-                    "refresh_token": config["refresh_token"],
-                    "redirect_uri": config["redirect_uri"],
-                    "grant_type": "refresh_token",
-                },
-                timeout=30,
-            )
-            resp.raise_for_status()
-            payload = resp.json()
+        if state["token"] is None or time.time() >= state["expires_at"]:
+            payload = post_form(TOKEN_URL, {**form, "grant_type": "refresh_token"})
             state["token"] = payload["access_token"]
             # reference safety margin: 7200 s − 100 s (outreach_etl.py:70)
-            state["expires_at"] = _time.time() + payload.get("expires_in", 7200) - 100
+            state["expires_at"] = time.time() + payload.get("expires_in", 7200) - 100
         return state["token"]
 
-    def fetch(endpoint: str, params: dict):
-        from .ingest.rest import Page
-
-        url = params.pop("__url", f"{API_BASE}/{endpoint}")
-        resp = requests.get(
-            url,
-            headers={"Authorization": f"Bearer {token()}"},
-            params={k: v for k, v in params.items() if not k.startswith("__")},
-            timeout=60,
-        )
-        resp.raise_for_status()
-        body = resp.json()
-        return Page(
-            data=body.get("data", []),
-            next_token=body.get("links", {}).get("next"),
-            total=body.get("meta", {}).get("count"),
-        )
-
-    return fetch
+    return http_fetcher(API_BASE, token)
 
 
 def run_replication(
@@ -124,16 +103,17 @@ def run_replication(
         )
         df = strip_prefix(df)  # outreach_etl.py:216 parity
         table_name = f"{config['table']}_{endpoint}"  # :217 parity
-        # updatedAt-day partitioning → downstream incremental reads prune
-        out = df.withColumn("sync_day", df["updatedAt"].cast("date")) \
-            if "updatedAt" in df.columns else df
-        part_cols = ["sync_day"] if "sync_day" in out.columns else []
         path = f"{output_dir}/{table_name}"
-        if part_cols:
-            write_partitioned(out, path, part_cols)
+        # the row count rides the write job: a separate count() would
+        # re-run the un-cached plan, re-fetching every page
+        rows = Observation()
+        out = df.observe(rows, F.count(F.lit(1)).alias("n"))
+        if "updatedAt" in df.columns:  # day partitions: incremental reads prune
+            write_partitioned(out.withColumn("sync_day", out["updatedAt"].cast("date")),
+                              path, ["sync_day"])
         else:
             out.write.mode("overwrite").parquet(path)
-        results[table_name] = out.count()
+        results[table_name] = rows.get["n"]
         logger.info("synced %s: %d rows [%s, %s)", table_name,
                     results[table_name], lo, hi)
 
@@ -185,10 +165,14 @@ def _query(argv: list[str], explain: bool = False) -> int:
         return 2
     spark = get_spark(app_name=f"query-{args.name}")
     df = REGISTRY[args.name].fn(spark, args.sf_dir)
+    return _print_rows(df, args.limit, explain)
+
+
+def _print_rows(df, limit: int, explain: bool) -> int:
     if explain:
         df.explain("formatted")
         return 0
-    for row in df.limit(args.limit).collect():
+    for row in df.limit(limit).collect():
         print(json.dumps(row.asDict(), default=str, sort_keys=True))
     return 0
 
@@ -241,12 +225,7 @@ def _sql(argv: list[str]) -> int:
             # later with an unhelpful "table not found"
             print(f"warning: could not register table {t!r}: {exc}", file=sys.stderr)
     df = spark.sql(sql_text, args=params) if params else spark.sql(sql_text)
-    if args.explain:
-        df.explain("formatted")
-        return 0
-    for row in df.limit(args.limit).collect():
-        print(json.dumps(row.asDict(), default=str, sort_keys=True))
-    return 0
+    return _print_rows(df, args.limit, args.explain)
 
 
 def _compact(argv: list[str]) -> int:
@@ -290,24 +269,14 @@ def main(argv: list[str] | None = None) -> int:
     `query`/`explain`/`list` expose the analytics registry; `sql` runs
     ad-hoc SQL over the catalog views; `compact` rewrites fragmented
     parquet directories."""
-    import sys as _sys
-
-    argv = list(_sys.argv[1:] if argv is None else argv)
-    if argv and argv[0] in (
-        "replicate", "query", "explain", "list", "compact", "sql"
-    ):
-        cmd, rest = argv[0], argv[1:]
-        if cmd == "replicate":
-            return _replicate(rest)
-        if cmd == "query":
-            return _query(rest)
-        if cmd == "explain":
-            return _query(rest, explain=True)
-        if cmd == "compact":
-            return _compact(rest)
-        if cmd == "sql":
-            return _sql(rest)
-        return _list(rest)
+    argv = list(sys.argv[1:] if argv is None else argv)
+    commands = {
+        "replicate": _replicate, "query": _query, "list": _list,
+        "explain": lambda rest: _query(rest, explain=True),
+        "compact": _compact, "sql": _sql,
+    }
+    if argv and argv[0] in commands:
+        return commands[argv[0]](argv[1:])
     return _replicate(argv)  # legacy flag form
 
 

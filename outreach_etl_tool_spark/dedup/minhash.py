@@ -65,11 +65,12 @@ def _hash_family(num_hashes: int, seed: int = 7):
     return a, b
 
 
-def _fnv1a_vec(strings: list[str]) -> np.ndarray:
-    """FNV-1a over utf-8 bytes for every string, vectorized across
-    strings via a padded byte matrix (the sequential dependency is only
-    along each string's bytes — shingles are ~20 bytes, so this is ~20
-    C passes instead of a Python loop per byte)."""
+def fnv1a_vec(strings: list[str]) -> np.ndarray:
+    """FNV-1a over utf-8 bytes for every string (stable across Python
+    versions, unlike hash()), vectorized across strings via a padded
+    byte matrix (the sequential dependency is only along each string's
+    bytes — shingles are ~20 bytes, so this is ~20 C passes instead of
+    a Python loop per byte)."""
     enc = [s.encode("utf-8") for s in strings]
     n = len(enc)
     maxlen = max((len(e) for e in enc), default=0)
@@ -119,7 +120,7 @@ def make_signature_udf(num_hashes: int = 32, k: int = 3):
             [np.asarray(t, dtype=object) for t in token_arrays[keep]]
         )
         uniq, inv = np.unique(flat, return_inverse=True)
-        th = _fnv1a_vec(list(uniq))[inv]  # flat token hashes
+        th = fnv1a_vec(list(uniq))[inv]  # flat token hashes
         lens = lengths[keep]
         starts = np.zeros(len(lens), dtype=np.int64)
         np.cumsum(lens[:-1], out=starts[1:])

@@ -23,34 +23,9 @@ from pyspark.sql.types import LongType
 
 from ..functions.text import tokens
 from ..operators.util import ensure_parallelism
+from .minhash import fnv1a_vec
 
 _MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-
-def _fnv1a_vec(unique_tokens: np.ndarray) -> np.ndarray:
-    """Deterministic 64-bit token hash (FNV-1a over utf-8 bytes).
-    Stable across Python versions (unlike hash()).
-
-    Vectorized across tokens: the sequential dependency of FNV is only
-    along a token's *bytes*, so we pad tokens into a byte matrix and
-    run max_len vectorized rounds — tokens are short (~5-10 bytes), so
-    this is a handful of C passes instead of a Python loop per byte.
-    """
-    enc = [t.encode("utf-8") for t in unique_tokens]
-    n = len(enc)
-    maxlen = max((len(e) for e in enc), default=0)
-    mat = np.zeros((n, maxlen), dtype=np.uint64)
-    alive = np.zeros((n, maxlen), dtype=bool)
-    for i, e in enumerate(enc):
-        b = np.frombuffer(e, dtype=np.uint8)
-        mat[i, : len(b)] = b
-        alive[i, : len(b)] = True
-    h = np.full(n, 0xCBF29CE484222325, dtype=np.uint64)
-    prime = np.uint64(0x100000001B3)
-    for j in range(maxlen):
-        sel = alive[:, j]
-        h[sel] = (h[sel] ^ mat[sel, j]) * prime  # uint64 array mul wraps mod 2^64
-    return h
 
 
 _BIT_IDX = np.arange(64, dtype=np.uint64)
@@ -70,7 +45,7 @@ def simhash64(token_arrays: pd.Series) -> pd.Series:
             [np.asarray(t, dtype=object) for t in token_arrays[keep]]
         )
         uniq, inv = np.unique(flat, return_inverse=True)
-        hashes = _fnv1a_vec(uniq)[inv]
+        hashes = fnv1a_vec(uniq)[inv]
         votes = (
             ((hashes[:, None] >> _BIT_IDX[None, :]) & np.uint64(1)).astype(np.int8)
             * 2

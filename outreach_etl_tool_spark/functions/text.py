@@ -34,6 +34,20 @@ def tokens(text: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_RE), 0)
 
 
+def token_bigrams(toks: Column) -> Column:
+    """Adjacent (prev, nxt) token pairs of a token array; empty below 2
+    tokens, so explode() drops short docs without a filter."""
+    n = F.size(toks)
+    idx = F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1)))
+    p = F.transform(
+        idx,
+        lambda i: F.struct(F.get(toks, i - 1).alias("prev"), F.get(toks, i).alias("nxt")),
+    )
+    return F.when(n >= 2, p).otherwise(
+        F.array().cast("array<struct<prev:string,nxt:string>>")
+    )
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 

@@ -12,18 +12,24 @@
    double-fetch (outreach_etl.py:160-166 used inclusive date..date) —
    and the final keep-latest upsert makes re-pulled rows idempotent.
 
+This module is the package's one paginated-replication path: window
+querystring, page loop, bounded retry, column alignment and HTTP
+transport. ``cli.py`` and ``sources/restapi.py`` only build a Fetcher.
+
 Scale design: the driver only orchestrates; record flattening and
 frame building run on executors. The distributed path partitions the
 date range and fetches day-windows in parallel with ``mapInPandas`` —
 one task per day, the Spark analog of the reference's adaptive
 per-day re-plan (outreach_etl.py:127,157). The fetcher is an injected
-callable (endpoint, params) → Page, so tests (and any real HTTP
-client) plug in without the engine importing requests.
+callable (endpoint, params) → Page; :func:`http_fetcher` is the real one.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
+import urllib.parse
+import urllib.request
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -34,8 +40,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..catalog import ensure_shipped
 from .flatten import flatten_record
-from .schema_loader import coerce_types, ref_schema_to_struct
+from .schema_loader import coerce_types
 
 
 @dataclass
@@ -47,6 +54,7 @@ class Page:
     total: int | None = None  # meta.count
 
 
+# (endpoint, params) → Page; a continuation adds "page[next]": next_token
 Fetcher = Callable[[str, dict[str, Any]], Page]
 
 
@@ -83,6 +91,12 @@ def window_params(lo: dt.date, hi: dt.date, page_size: int) -> dict[str, Any]:
     }
 
 
+def params_window(params: dict[str, Any]) -> tuple[dt.date, dt.date]:
+    """The half-open [lo, hi) window of a :func:`window_params` query."""
+    lo, hi_incl = map(dt.date.fromisoformat, params["filter[updatedAt]"].split(".."))
+    return lo, hi_incl + dt.timedelta(days=1)
+
+
 def fetch_window(
     fetcher: Fetcher,
     endpoint: str,
@@ -103,20 +117,33 @@ def fetch_window(
     return records
 
 
-def probe_count(
-    fetcher: Fetcher,
-    endpoint: str,
-    lo: dt.date,
-    hi: dt.date,
-    page_size: int = 100,
-    max_retries: int = 3,
-) -> int | None:
-    """meta.count for the window (the adaptive-replan input). Honors
-    the caller's retry budget — this probe gates the whole sync, so it
-    must not be the least-retried fetch of the run."""
-    return _fetch_retry(
-        fetcher, endpoint, window_params(lo, hi, page_size), max_retries
-    ).total
+def _urlopen_json(req: urllib.request.Request, timeout: float) -> Any:
+    with urllib.request.urlopen(req, timeout=timeout) as resp:
+        return json.loads(resp.read())
+
+
+def http_fetcher(base_url: str, token: Callable[[], str]) -> Fetcher:
+    """The JSON-API GET (outreach_etl.py:96-119), Bearer ``token()`` per
+    request. A window starts at ``{base_url}/{endpoint}?{window_params}``
+    and continues at the server's ``links.next`` URL, verbatim. Errors
+    propagate to the caller's retry loop."""
+
+    def fetch(endpoint: str, params: dict[str, Any]) -> Page:
+        url = params.get("page[next]") or (
+            f"{base_url.rstrip('/')}/{endpoint}?{urllib.parse.urlencode(params)}"
+        )
+        headers = {"Authorization": f"Bearer {tok}"} if (tok := token()) else {}
+        body = _urlopen_json(urllib.request.Request(url, headers=headers), timeout=60)
+        return Page(body.get("data") or [], (body.get("links") or {}).get("next"),
+                    (body.get("meta") or {}).get("count"))
+
+    return fetch
+
+
+def post_form(url: str, fields: dict[str, str]) -> Any:
+    """POST a urlencoded form; the decoded JSON reply (OAuth refresh)."""
+    data = urllib.parse.urlencode(fields).encode()
+    return _urlopen_json(urllib.request.Request(url, data=data), timeout=30)
 
 
 def day_windows(lo: dt.date, hi: dt.date) -> list[tuple[dt.date, dt.date]]:
@@ -142,16 +169,15 @@ def replication_window(
     raise ValueError(f"unknown replication mode {mode!r}")
 
 
-def _records_to_pdf(records: list[dict[str, Any]], names: list[str]) -> pd.DataFrame:
-    """Align flat records to the declared column set (absent → null —
+def align(record: dict[str, Any], names: list[str]) -> tuple[str | None, ...]:
+    """One flat record as a row of the declared columns (absent → null —
     the concat-against-schema semantics of etl_tools.py:41), stringified
     for the all-string ingest frame that coerce_types finalizes."""
-    cols: dict[str, list[str | None]] = {n: [] for n in names}
-    for rec in records:
-        for n in names:
-            v = rec.get(n)
-            cols[n].append(None if v is None else str(v))
-    return pd.DataFrame(cols, dtype=object)
+    return tuple(None if (v := record.get(n)) is None else str(v) for n in names)
+
+
+def _records_to_pdf(records: list[dict[str, Any]], names: list[str]) -> pd.DataFrame:
+    return pd.DataFrame([align(r, names) for r in records], columns=names, dtype=object)
 
 
 def sync_endpoint(
@@ -182,12 +208,16 @@ def sync_endpoint(
         [T.StructField(n, T.StringType(), True) for n in names]
     )
 
-    total = probe_count(fetcher, endpoint, lo, hi, page_size, max_retries)
+    # meta.count probe (the adaptive-replan input), on the full retry
+    # budget: it gates the whole sync
+    params = window_params(lo, hi, page_size)
+    total = _fetch_retry(fetcher, endpoint, params, max_retries).total
     if total is not None and total > large_threshold:
         days = [(a.isoformat(), b.isoformat()) for a, b in day_windows(lo, hi)]
         day_df = spark.createDataFrame(days, "d_lo string, d_hi string").repartition(
             max(1, min(len(days), spark.sparkContext.defaultParallelism))
         )
+        ensure_shipped(spark)  # the workers below import this package
 
         def fetch_days(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:

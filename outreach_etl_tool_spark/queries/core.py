@@ -124,7 +124,7 @@ WHERE l_quantity > 40
 
 # ---------------------------------------------------------------------------
 # P3 — range predicate on a timestamp, pushed down to the parquet scan
-# (the reference pushes filter[updatedAt]=lo..hi to its source,
+# (the reference pushes its updatedAt=lo..hi filter to its source,
 # outreach_etl.py:115-117; Catalyst pushes BETWEEN to row-group min/max).
 # ---------------------------------------------------------------------------
 def filter_ts_range(spark: SparkSession, sf_dir: str) -> DataFrame:

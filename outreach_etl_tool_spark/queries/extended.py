@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.expr import bind_once
 from ..functions.scalars import exact_sum, sum_sql
-from ..functions.text import tokens
+from ..functions.text import token_bigrams, tokens
 from ..operators.util import ensure_parallelism
 from . import QuerySpec
 
@@ -149,21 +149,8 @@ def bigram_lm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Token array bound once; short docs yield an empty pair array that
     # explode() drops for free, replacing a filter(n >= 2) that would
     # re-inline the tokenizer as a predicate.
-    def _pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1)))
-        p = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.get(toks, i - 1).alias("prev"), F.get(toks, i).alias("nxt")
-            ),
-        )
-        return F.when(n >= 2, p).otherwise(
-            F.array().cast("array<struct<prev:string,nxt:string>>")
-        )
-
     bi = (
-        docs.select(F.explode(bind_once(tokens("text"), _pairs)).alias("p"))
+        docs.select(F.explode(bind_once(tokens("text"), token_bigrams)).alias("p"))
         .select("p.prev", "p.nxt")
         .groupBy("prev", "nxt")
         .agg(F.count("*").alias("n_bi"))

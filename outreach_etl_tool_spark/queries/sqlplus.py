@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.expr import bind_once
 from ..functions.scalars import exact_sum, sum_sql
-from ..functions.text import tokens
+from ..functions.text import token_bigrams, tokens
 from ..operators.util import ensure_parallelism
 from . import QuerySpec
 
@@ -319,22 +319,9 @@ def lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
 
-    def _pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1)))
-        p = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.get(toks, i - 1).alias("prev"), F.get(toks, i).alias("nxt")
-            ),
-        )
-        return F.when(n >= 2, p).otherwise(
-            F.array().cast("array<struct<prev:string,nxt:string>>")
-        )
-
     occ = (
         docs.select(
-            "doc_id", F.explode(bind_once(tokens("text"), _pairs)).alias("p")
+            "doc_id", F.explode(bind_once(tokens("text"), token_bigrams)).alias("p")
         )
         .select("doc_id", "p.prev", "p.nxt")
         # localCheckpoint, not persist (cache-leak hygiene)
@@ -432,24 +419,11 @@ def lm_target_score_frame(
     it the TRAIN split only so the eval split leaks nothing into the
     model."""
 
-    def _pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1)))
-        p = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.get(toks, i - 1).alias("prev"), F.get(toks, i).alias("nxt")
-            ),
-        )
-        return F.when(n >= 2, p).otherwise(
-            F.array().cast("array<struct<prev:string,nxt:string>>")
-        )
-
     occ = (
         docs.select(
             "doc_id",
             "lang",
-            F.explode(bind_once(tokens("text"), _pairs)).alias("p"),
+            F.explode(bind_once(tokens("text"), token_bigrams)).alias("p"),
         )
         .select("doc_id", "lang", "p.prev", "p.nxt")
         # feeds the target model build AND the scoring pass
@@ -558,25 +532,12 @@ def lm_excess_select_frame(
 ) -> DataFrame:
     from pyspark.sql.window import Window
 
-    def _pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1)))
-        p = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.get(toks, i - 1).alias("prev"), F.get(toks, i).alias("nxt")
-            ),
-        )
-        return F.when(n >= 2, p).otherwise(
-            F.array().cast("array<struct<prev:string,nxt:string>>")
-        )
-
     occ = (
         docs.select(
             "doc_id",
             "source",
             "lang",
-            F.explode(bind_once(tokens("text"), _pairs)).alias("p"),
+            F.explode(bind_once(tokens("text"), token_bigrams)).alias("p"),
         )
         .select("doc_id", "source", "lang", "p.prev", "p.nxt")
         # feeds the corpus model, the target model AND the scoring pass

@@ -5,7 +5,8 @@ reference's paginated REST extract: `spark.read.format("restapi")`
 with one input partition per day-window, so a year's backfill fans out
 across the cluster and each executor pages through its own window —
 the distributed analog of outreach_etl.py:157-188's sequential per-day
-loop.
+loop. Paging, retries and the HTTP transport are ``ingest/rest.py``'s;
+the source only turns its options into a fetcher and steps the days.
 """
 
 from .files import (

@@ -1,4 +1,5 @@
-"""Python Data Source for paginated JSON-API replication.
+"""``format("restapi")``: the paginated JSON-API extract (SURVEY.md §2.1
+S1) as a Python Data Source, batch and streaming.
 
 Usage::
 
@@ -12,29 +13,14 @@ Usage::
           .option("page_size", "100")
           .load())
 
-Design (SURVEY.md §2.1 S1):
-
-- **partitions()** returns one `DayWindow` per half-open [day, day+1)
-  — Spark schedules them across executors; a year's backfill is 365
-  parallel tasks instead of the reference's sequential loop.
-- **read(partition)** pages through its window with bounded retries
-  and no duplicate appends (the §2.12 bug fixes), flattens each
-  record to the declared column layout, and yields tuples.
-- **Filter pushdown** is positional by construction: the date window
-  IS the querystring filter, evaluated server-side, mirroring
-  `filter[updatedAt]` (outreach_etl.py:115-117).
-- Transport: `base_url` (HTTP GET via urllib, Bearer token from the
-  `token` option) or `dir_url` (a directory of
-  `{endpoint}/{day}/page{N}.json` files — the deterministic test/replay
-  transport; also what a capture-then-replay backfill uses).
-- **Streaming form**: `spark.readStream.format("restapi")` tails the
-  same source one day-window per micro-batch (offset = next unread
-  day, never past yesterday/`end`) — the reference's `previous_day`
-  cron mode as a replayable Structured Streaming source.
-
-The returned frame is all-string (JSON scalars stringified); callers
-finish with `ingest.schema_loader.coerce_types` + `upsert_latest`,
-exactly like the driver CLI path.
+A thin adapter: ``ingest/rest.py`` owns the window querystring, paging,
+retries, column alignment and HTTP transport. This module turns the
+options into a ``rest.Fetcher`` — ``base_url`` with the static ``token``,
+or ``dir_url``, a replay of ``{endpoint}/{day}/page{N}.json`` files —
+and steps ``rest.day_windows``: one input partition per day in batch
+(a year's backfill is 365 parallel tasks), one stride of days per
+micro-batch in ``spark.readStream``. Rows are all-string; callers finish
+with ``coerce_types`` + ``upsert_latest``, like the CLI.
 """
 
 from __future__ import annotations
@@ -44,6 +30,7 @@ import json
 from collections.abc import Iterator
 from dataclasses import dataclass
 from pathlib import Path
+from typing import Any
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -53,6 +40,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..catalog import ensure_shipped
+from ..ingest import rest
+
 
 @dataclass
 class DayWindow(InputPartition):
@@ -60,159 +50,81 @@ class DayWindow(InputPartition):
     hi: str  # ISO date, exclusive
 
 
-def _load_names(schema_file: str) -> list[str]:
-    with open(schema_file) as fh:
-        return list(json.load(fh))
+def _day_windows(lo: str, hi: str) -> list[DayWindow]:
+    days = rest.day_windows(dt.date.fromisoformat(lo), dt.date.fromisoformat(hi))
+    return [DayWindow(a.isoformat(), b.isoformat()) for a, b in days]
 
 
-# single source of truth for the flatten naming contract: the
-# golden-tested helper in ingest/flatten.py (a byte-level reimpl here
-# would silently drift from fixes landed there, giving batch-driver
-# ingest and format("restapi") ingest different column names for the
-# same payload)
-from ..ingest.flatten import flatten_record as _flatten  # noqa: E402
+def _replay_fetcher(root: str) -> rest.Fetcher:
+    """Each day's ``page*.json`` files in name order; the cursor is the
+    next file's index."""
+
+    def fetch(endpoint: str, params: dict[str, Any]) -> rest.Page:
+        files = [f for d, _ in rest.day_windows(*rest.params_window(params))
+                 for f in sorted((Path(root) / endpoint / d.isoformat()).glob("page*.json"))]
+        i = int(params.get("page[next]", 0))
+        if i >= len(files):
+            return rest.Page()
+        data = json.loads(files[i].read_text()).get("data") or []
+        return rest.Page(data, str(i + 1) if i + 1 < len(files) else None)
+
+    return fetch
 
 
 class _Reader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict) -> None:
         self.names = [f.name for f in schema.fields]
         self.options = options
+        if "dir_url" in options:
+            self.fetcher = _replay_fetcher(options["dir_url"])
+        else:
+            token = options.get("token", "")
+            self.fetcher = rest.http_fetcher(options["base_url"], lambda: token)
 
     def partitions(self) -> list[DayWindow]:
-        lo = dt.date.fromisoformat(self.options["start"])
-        hi = dt.date.fromisoformat(self.options["end"])
-        days = []
-        d = lo
-        while d < hi:
-            days.append(DayWindow(d.isoformat(), (d + dt.timedelta(days=1)).isoformat()))
-            d += dt.timedelta(days=1)
-        return days
+        return _day_windows(self.options["start"], self.options["end"])
 
-    # -- transports ---------------------------------------------------
-    def _pages_http(self, window: DayWindow) -> Iterator[list[dict]]:
-        import urllib.parse
-        import urllib.request
-
-        base = self.options["base_url"].rstrip("/")
-        endpoint = self.options["endpoint"]
-        page_size = int(self.options.get("page_size", "100"))
-        token = self.options.get("token", "")
-        # server range semantics are inclusive..inclusive (the reference
-        # sends date..date, outreach_etl.py:166); the half-open window
-        # converts to an inclusive upper bound of hi - 1 day
-        hi_incl = (
-            dt.date.fromisoformat(window.hi) - dt.timedelta(days=1)
-        ).isoformat()
-        params = {
-            "sort": "-updatedAt",
-            "page[limit]": str(page_size),
-            "filter[updatedAt]": f"{window.lo}..{hi_incl}",
-        }
-        url: str | None = f"{base}/{endpoint}?{urllib.parse.urlencode(params)}"
-        while url is not None:
-            body = self._http_get(url, token)
-            yield body.get("data", [])
-            url = (body.get("links") or {}).get("next")
-
-    @staticmethod
-    def _http_get(url: str, token: str, max_retries: int = 3) -> dict:
-        import urllib.request
-
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                req = urllib.request.Request(
-                    url, headers={"Authorization": f"Bearer {token}"} if token else {}
-                )
-                with urllib.request.urlopen(req, timeout=60) as resp:
-                    return json.loads(resp.read())
-            except Exception as exc:  # noqa: BLE001
-                last = exc
-        raise RuntimeError(f"GET {url}: retries exhausted") from last
-
-    def _pages_dir(self, window: DayWindow) -> Iterator[list[dict]]:
-        root = Path(self.options["dir_url"]) / self.options["endpoint"] / window.lo
-        if not root.is_dir():
-            return
-        for page in sorted(root.glob("page*.json")):
-            yield json.loads(page.read_text()).get("data", [])
-
-    # -- read ---------------------------------------------------------
     def read(self, partition: DayWindow) -> Iterator[tuple]:
-        pages = (
-            self._pages_dir(partition)
-            if "dir_url" in self.options
-            else self._pages_http(partition)
-        )
-        for page in pages:
-            for record in page:
-                flat = _flatten(record)
-                yield tuple(
-                    None if flat.get(n) is None else str(flat.get(n))
-                    for n in self.names
-                )
+        for record in rest.fetch_window(
+            self.fetcher, self.options["endpoint"],
+            dt.date.fromisoformat(partition.lo), dt.date.fromisoformat(partition.hi),
+            int(self.options.get("page_size", "100")),
+        ):
+            yield rest.align(record, self.names)
 
 
 class _StreamReader(SimpleDataSourceStreamReader):
-    """Streaming tail of the same source: offset = next unread day, one
-    day-window per micro-batch — the reference's `previous_day` cron
-    mode (outreach_etl.py:227-229) as a Structured Streaming source
-    with exactly-once, replayable offsets.
-
-    The simple stream API reads on the driver (fine for API-paged
-    tails — the reference itself was one sequential process); bulk
-    backfill stays on the partitioned batch reader. `end` (exclusive)
-    bounds the stream so `trigger(availableNow=True)` drains a fixed
-    replay window and stops advancing.
+    """Streaming tail: offset = next unread day — the reference's
+    `previous_day` cron mode (outreach_etl.py:227-229) with replayable
+    offsets. Reads run on the driver; bulk backfill stays on the batch
+    reader. Never reads today (still receiving updates) or past the
+    exclusive `end`, so `trigger(availableNow=True)` drains and stops.
+    A batch after downtime catches up `max_days_per_batch` days at once.
     """
 
     def __init__(self, schema: StructType, options: dict) -> None:
         self.inner = _Reader(schema, options)
         self.start = options["start"]
-        self.end = options.get("end")  # exclusive bound; open-ended if absent
-        # catch-up stride: one batch covers up to this many unread days
-        # (steady state is 1 day/batch; first run after downtime drains
-        # the backlog in max_days_per_batch chunks)
+        self.end = options.get("end")
         self.max_days = int(options.get("max_days_per_batch", "30"))
 
     def initialOffset(self) -> dict:
         return {"next_day": self.start}
 
-    def _bound(self) -> str:
-        # never read a day that may still be receiving updates
-        today = dt.date.today().isoformat()
-        return min(self.end, today) if self.end else today
-
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        day = start["next_day"]
-        bound = self._bound()
-        if day >= bound:
+        today = dt.date.today().isoformat()
+        bound = min(self.end, today) if self.end else today
+        if start["next_day"] >= bound:
             return iter(()), start  # caught up: offset unchanged
-        d = dt.date.fromisoformat(day)
-        stop = min(
-            dt.date.fromisoformat(bound), d + dt.timedelta(days=self.max_days)
-        )
-        # day-stepped (both transports window per day), materialized as
+        stride = dt.date.fromisoformat(start["next_day"]) + dt.timedelta(days=self.max_days)
+        end = {"next_day": min(bound, stride.isoformat())}
         # a list, not a generator: Spark's prefetch cache copy.copy()s
-        # the returned iterator (generators aren't copyable)
-        rows: list[tuple] = []
-        cur = d
-        while cur < stop:
-            nxt = cur + dt.timedelta(days=1)
-            rows.extend(
-                self.inner.read(DayWindow(cur.isoformat(), nxt.isoformat()))
-            )
-            cur = nxt
-        return iter(rows), {"next_day": stop.isoformat()}
+        # the iterator, and a failed day must fail before any offset
+        return iter(list(self.readBetweenOffsets(start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # deterministic replay for recovery: re-pages [start, end)
-        d = dt.date.fromisoformat(start["next_day"])
-        stop = dt.date.fromisoformat(end["next_day"])
-        while d < stop:
-            nxt = d + dt.timedelta(days=1)
-            yield from self.inner.read(DayWindow(d.isoformat(), nxt.isoformat()))
-            d = nxt
+        for w in _day_windows(start["next_day"], end["next_day"]):
+            yield from self.inner.read(w)
 
 
 class RestApiDataSource(DataSource):
@@ -224,8 +136,8 @@ class RestApiDataSource(DataSource):
         return "restapi"
 
     def schema(self) -> StructType:
-        names = _load_names(self.options["schema_file"])
-        return StructType([StructField(n, StringType(), True) for n in names])
+        with open(self.options["schema_file"]) as fh:
+            return StructType([StructField(n, StringType(), True) for n in json.load(fh)])
 
     def reader(self, schema: StructType) -> _Reader:
         return _Reader(schema, dict(self.options))
@@ -235,4 +147,5 @@ class RestApiDataSource(DataSource):
 
 
 def register(spark) -> None:
+    ensure_shipped(spark)  # the readers run in workers that import this package
     spark.dataSource.register(RestApiDataSource)

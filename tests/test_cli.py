@@ -5,10 +5,18 @@ naming, upsert) across all three endpoints with a fake API."""
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
+import threading
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pytest
+
+from outreach_etl_tool_spark import cli
 from outreach_etl_tool_spark.cli import run_replication
+from outreach_etl_tool_spark.ingest import rest
 from outreach_etl_tool_spark.ingest.rest import Page
+from outreach_etl_tool_spark.sources import register
 
 
 def fake_api(rows_by_endpoint):
@@ -188,3 +196,99 @@ def test_cli_compact_subcommand(spark, tmp_path, capsys):
     payload = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert payload["files"] == len(glob.glob(f"{dest}/*.parquet"))
     assert spark.read.parquet(dest).count() == 50_000
+
+
+def test_per_day_sync_fetches_each_page_once(spark, tmp_path, monkeypatch):
+    """The row count rides the write job: a second count() would re-run
+    the per-day mapInPandas fetch and request every page again."""
+    # 4 prospects on 03-01, 3 on 03-02: two 2-row pages per day
+    api = fake_api({"prospects": [
+        resource("prospects", i, f"2024-03-0{1 + i % 2}") for i in range(7)]})
+    calls = spark.sparkContext.accumulator(0)
+
+    def fetcher(endpoint: str, params: dict) -> Page:
+        calls.add(endpoint == "prospects")
+        return api(endpoint, params)
+
+    monkeypatch.setattr(cli, "sync_endpoint",  # 7 rows > 3: one task per day
+                        functools.partial(rest.sync_endpoint, large_threshold=3))
+    results = run_replication(
+        spark, {"replication_type": "full", "start_date": "2024-03-01", "table": "t"},
+        str(tmp_path / "o"), fetcher=fetcher, notifier=CaptureNotifier(),
+        today=dt.date(2024, 3, 3),
+    )
+    assert results["t_prospects"] == 7
+    assert calls.value == 1 + 2 + 2  # one count probe, then each page once
+
+
+# ------------------------------------------ HTTP transport, local server
+API_RECORDS = [{"id": i, "attributes": {"name": f"n{i}"}} for i in (1, 2, 3)]
+
+
+class _Api(BaseHTTPRequestHandler):
+    """OAuth token on POST; GET serves a 2-page window whose links.next
+    is a full URL. After 20 requests every GET is a 500, so a paging
+    loop that never reaches page 2 fails fast instead of hanging."""
+
+    def _reply(self, status: int, body: dict) -> None:
+        raw = json.dumps(body).encode()
+        self.send_response(status)
+        self.send_header("Content-Length", str(len(raw)))
+        self.end_headers()
+        self.wfile.write(raw)
+
+    def do_POST(self) -> None:
+        self.rfile.read(int(self.headers["Content-Length"]))
+        self.server.log.append(("POST", self.path, None))
+        self._reply(200, {"access_token": "oauth-tok", "expires_in": 7200})
+
+    def do_GET(self) -> None:
+        srv = self.server
+        srv.log.append(("GET", self.path, self.headers["Authorization"]))
+        if srv.fail_once or len(srv.log) > 20:
+            srv.fail_once = False
+            return self._reply(500, {})
+        last = "cursor=2" in self.path
+        self._reply(200, {
+            "data": API_RECORDS[2:] if last else API_RECORDS[:2],
+            "links": {} if last else {"next": f"{srv.base}/prospects?cursor=2"},
+            "meta": {"count": 3},
+        })
+
+
+@pytest.fixture()
+def api_server():
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _Api)
+    srv.log, srv.fail_once = [], False
+    srv.base = f"http://127.0.0.1:{srv.server_port}/api/v2"
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield srv
+    srv.shutdown()
+    srv.server_close()
+
+
+def test_cli_http_fetcher_follows_links_next(api_server, monkeypatch):
+    monkeypatch.setattr(cli, "API_BASE", api_server.base)
+    monkeypatch.setattr(cli, "TOKEN_URL", f"{api_server.base}/oauth/token")
+    fetcher = cli.make_http_fetcher(dict.fromkeys(
+        ("client_id", "client_secret", "refresh_token", "redirect_uri"), "x"))
+    api_server.fail_once = True  # one transient 500: retried exactly once
+    recs = rest.fetch_window(fetcher, "prospects", dt.date(2024, 3, 1), dt.date(2024, 3, 2))
+    assert [r["id"] for r in recs] == [1, 2, 3]
+    # one token POST, reused; page 2 is links.next itself
+    first = ("GET", "/api/v2/prospects?sort=-updatedAt", "Bearer oauth-tok")
+    assert [(m, path.split("&")[0], auth) for m, path, auth in api_server.log] == [
+        ("POST", "/api/v2/oauth/token", None), first, first,
+        ("GET", "/api/v2/prospects?cursor=2", "Bearer oauth-tok"),
+    ]
+
+
+def test_restapi_source_over_http(spark, api_server, tmp_path):
+    (tmp_path / "p.json").write_text(json.dumps({"id": "integer", "attributes_name": "string"}))
+    register(spark)
+    df = (spark.read.format("restapi").option("endpoint", "prospects")
+          .option("schema_file", str(tmp_path / "p.json"))
+          .option("start", "2024-03-01").option("end", "2024-03-02")
+          .option("base_url", api_server.base).option("token", "static-tok").load())
+    assert sorted(r["attributes_name"] for r in df.collect()) == ["n1", "n2", "n3"]
+    assert [auth for _, _, auth in api_server.log] == ["Bearer static-tok"] * 2

@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+import re
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -370,3 +374,36 @@ def test_upsert_latest_keeps_latest(spark):
 def test_strip_prefix(spark):
     df = spark.createDataFrame([(1, "x")], "id long, attributes_name string")
     assert rest.strip_prefix(df).columns == ["id", "name"]
+
+
+_OUTSIDE_REPO_SYNC = """import datetime as dt, sys
+sys.path.insert(0, sys.argv[1])
+from outreach_etl_tool_spark.ingest import rest
+from outreach_etl_tool_spark.session import get_spark
+fetch = lambda endpoint, params: rest.Page(  # a record a day; meta.count 3 > 1
+    [{"id": int(params["filter[updatedAt]"][8:10])}], None, 3)
+df = rest.sync_endpoint(get_spark(master="local[2]", shuffle_partitions=2), fetch,
+                        "prospects", {"id": "integer"}, dt.date(2024, 3, 1),
+                        dt.date(2024, 3, 4), large_threshold=1)
+print("ids", sorted(r.id for r in df.collect()))"""
+
+
+def test_per_day_sync_from_outside_the_repo(tmp_path):
+    """The per-day path's Python workers import the package, so a driver
+    started outside the repository must ship it to them."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_REPO_SYNC, str(Path(__file__).resolve().parents[1])],
+        cwd=tmp_path, env={**env, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "ids [1, 2, 3]" in proc.stdout, proc.stderr[-3000:]
+
+
+def test_paging_and_transport_live_only_in_ingest_rest():
+    """One copy of the paginated path: urlopen, the window filter key and
+    links.next paging appear only in ingest/rest.py; requests is unused."""
+    pkg = Path(rest.__file__).parents[1]
+    marker = re.compile(r"urlopen|filter\[updatedAt\]|[\"']links[\"']|import requests")
+    hits = {str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if marker.search(p.read_text())}
+    assert hits == {"ingest/rest.py"}

@@ -42,7 +42,7 @@ SURVEY_IDS = {
 
 # ids fulfilled outside the registry (modules + tests instead of queries)
 MODULE_COVERAGE = {
-    "S1": "sources/restapi.py (Python DataSource: partition-per-day batch + day-offset streaming tail) + ingest/rest.py (bug-fixed sync driver); tests/test_sources.py, tests/test_ingest.py",
+    "S1": "ingest/rest.py (the one paginated path: window querystring, links.next paging, bounded retry, urllib Bearer transport, bug-fixed sync driver) driven by cli.py (OAuth token refresh) and sources/restapi.py (Python DataSource adapter: partition-per-day batch + day-offset streaming tail); tests/test_ingest.py, tests/test_sources.py, tests/test_cli.py",
     "S2": "ingest/schema_loader.py empty_frame (tests/test_ingest.py)",
     "S3": "ingest/schema_loader.py load_ref_schema (tests/test_ingest.py)",
     "S4": "sinks/writers.py BigQuerySink (connector-gated stub; tests/test_sinks.py)",
